@@ -15,9 +15,8 @@ Parser surface:
     xref offset does not actually start ``n g obj`` is recovered by a
     full-document scan (hostile fixtures pin this);
   * streams: ``/Length`` (direct or indirect) with an ``endstream``
-    rescue, ``/Filter`` FlateDecode via the repo's own clean-room
-    DEFLATE decoder (sources/inflate.py — no stdlib zlib in the
-    decode path);
+    rescue, ``/Filter`` FlateDecode via stdlib zlib (a damaged or
+    truncated stream raises ``PdfError``);
   * document walk: trailer ``/Root`` -> catalog ``/Pages`` -> page
     tree (``/Kids`` recursion) -> per-page ``/Contents`` (single
     stream or array of streams);
@@ -29,10 +28,10 @@ Parser surface:
 
 The fixture builder (``build_pdf``) emits deterministic single-xref
 documents, optionally FlateDecode-compressed with a STORED-mode zlib
-wrapper (RFC 1950 framing + RFC 1951 stored blocks + Adler-32) so the
-distributed entry exercises the inflate path without any compressor
-dependency; tests additionally round-trip real DEFLATE from stdlib
-zlib as an adversarial cross-check.
+wrapper (RFC 1950 framing + RFC 1951 stored blocks + Adler-32), so
+the distributed entry exercises the FlateDecode path with byte-stable
+fixtures; tests additionally decode real DEFLATE from
+``zlib.compress``.
 
 Scale design (p_pdf_extract): one Arrow mapInPandas pass, codec
 shipped by-value; per-row cost linear in document size, no shuffle.
@@ -41,12 +40,12 @@ shipped by-value; per-row cost linear in document size, no shuffle.
 from __future__ import annotations
 
 import re
+import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_clone_spark.catalog import table
 from hive_clone_spark.registry import register
-from hive_clone_spark.sources.inflate import inflate_zlib
 
 
 class PdfError(ValueError):
@@ -408,7 +407,10 @@ class PdfDocument:
         for f in filters:
             f = self.resolve(f)
             if f == "FlateDecode":
-                out = inflate_zlib(out)
+                try:
+                    out = zlib.decompress(out)
+                except zlib.error as e:
+                    raise PdfError(f"FlateDecode: {e}") from e
             else:
                 raise PdfError(f"unsupported filter {f!r}")
         return out
@@ -528,17 +530,8 @@ def pdf_extract_pages(data: bytes) -> list[bytes]:
 
 
 # ---------------------------------------------------------------------------
-# fixture builder (deterministic; STORED-mode zlib keeps the encode
-# side clean-room while the decode side runs sources/inflate.py)
+# fixture builder (deterministic; STORED-mode zlib wrapper)
 # ---------------------------------------------------------------------------
-def _adler32(data: bytes) -> int:
-    a, b = 1, 0
-    for byte in data:
-        a = (a + byte) % 65521
-        b = (b + a) % 65521
-    return (b << 16) | a
-
-
 def zlib_stored(data: bytes) -> bytes:
     """RFC 1950 wrapper around RFC 1951 stored (uncompressed) blocks."""
     out = bytearray(b"\x78\x01")
@@ -553,7 +546,7 @@ def zlib_stored(data: bytes) -> bytes:
         out += len(chunk).to_bytes(2, "little")
         out += (len(chunk) ^ 0xFFFF).to_bytes(2, "little")
         out += chunk
-    out += _adler32(data).to_bytes(4, "big")
+    out += zlib.adler32(data).to_bytes(4, "big")
     return bytes(out)
 
 
@@ -643,11 +636,9 @@ def p_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import cloudpickle as _cp
 
     import hive_clone_spark.pipeline.pdfcodec as _mod
-    import hive_clone_spark.sources.inflate as _inf
     from hive_clone_spark.pipeline.common import spread
 
     _cp.register_pickle_by_value(_mod)
-    _cp.register_pickle_by_value(_inf)
 
     d = spread(table(spark, sf_dir, "documents").select("doc_id", "text"))
 

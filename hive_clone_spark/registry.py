@@ -68,11 +68,8 @@ def load_all_modules() -> None:
     from hive_clone_spark.pipeline import sampling  # noqa: F401
     from hive_clone_spark.pipeline import selection  # noqa: F401
     from hive_clone_spark.sources import avro  # noqa: F401
-    from hive_clone_spark.sources import lz4  # noqa: F401
-    from hive_clone_spark.sources import snappy  # noqa: F401
-    from hive_clone_spark.sources import inflate  # noqa: F401
+    from hive_clone_spark.sources import codecs  # noqa: F401
     from hive_clone_spark.sources import msgpack  # noqa: F401
-    from hive_clone_spark.sources import zstd  # noqa: F401
     from hive_clone_spark.sources import tfrecord  # noqa: F401
     from hive_clone_spark.pipeline import tfexample  # noqa: F401
     from hive_clone_spark.sources import queries as source_queries  # noqa: F401

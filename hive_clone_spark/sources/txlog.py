@@ -730,7 +730,9 @@ class TxLog:
         so no inference job) and exploded executor-side — positions
         are never materialized on the driver, so a billion-row delete
         stays a distributed read of its bitmap sidecars, exactly how a
-        production reader consumes roaring-bitmap DVs. ``__file`` is
+        production reader consumes roaring-bitmap DVs. The read is
+        FAILFAST: a damaged sidecar raises instead of parsing to a null
+        position list that would un-delete its rows. ``__file`` is
         the DATA file's basename (what ``_apply_dvs`` matches on); the
         sidecar-to-data-file binding is METADATA (O(files touched), a
         commit-log fact), so the tiny local binding relation is the
@@ -744,6 +746,7 @@ class TxLog:
         )
         raw = (
             spark.read.schema("positions array<bigint>")
+            .option("mode", "FAILFAST")
             .json([str(self.root / dv) for dv in dvs.values()])
             .select(
                 F.element_at(

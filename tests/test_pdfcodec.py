@@ -1,11 +1,11 @@
 """PDF text extraction (pipeline/pdfcodec.py): object-parser spec
 cases, hostile fixtures (lying xref, nested parens, escapes), filter
-paths (our stored-zlib + real stdlib DEFLATE cross-check), and
+paths (our stored-zlib + real zlib DEFLATE, damaged streams), and
 roundtrips through the deterministic fixture builder."""
 
 from __future__ import annotations
 
-import zlib as _stdlib_zlib
+import zlib
 
 import pytest
 from hypothesis import given, settings
@@ -20,7 +20,6 @@ from hive_clone_spark.pipeline.pdfcodec import (
     pdf_extract_pages,
     zlib_stored,
 )
-from hive_clone_spark.sources.inflate import inflate_zlib
 
 
 # ---------------------------------------------------------------------------
@@ -94,12 +93,10 @@ def test_lying_xref_offsets_recovered_by_scan():
     assert pdf_extract_pages(doc) == pages
 
 
-def test_stdlib_deflate_cross_check():
-    """Adversarial cross-check: a stream compressed by REAL zlib must
-    decode through our clean-room inflate inside the PDF walk."""
-    content = b"BT (Real deflate payload) Tj ET"
-    comp = _stdlib_zlib.compress(content, 9)
-    body = (
+def _flate_page(comp: bytes) -> bytes:
+    """One-page document whose content stream is ``comp`` under
+    /FlateDecode."""
+    return (
         b"%PDF-1.4\n"
         b"1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
         b"2 0 obj\n<< /Type /Pages /Kids [ 3 0 R ] /Count 1 >>\nendobj\n"
@@ -108,12 +105,32 @@ def test_stdlib_deflate_cross_check():
         + b" /Filter /FlateDecode >>\nstream\n" + comp + b"\nendstream\nendobj\n"
         b"trailer\n<< /Size 5 /Root 1 0 R >>\n"
     )
-    assert pdf_extract_pages(body) == [b"Real deflate payload"]
+
+
+def test_stdlib_deflate_cross_check():
+    """A stream compressed by real zlib (dynamic Huffman blocks, not
+    the stored blocks ``build_pdf`` writes) decodes inside the PDF walk."""
+    comp = zlib.compress(b"BT (Real deflate payload) Tj ET", 9)
+    assert pdf_extract_pages(_flate_page(comp)) == [b"Real deflate payload"]
+
+
+def test_damaged_flate_stream_raises():
+    """Outside input must fail closed: a truncated or corrupted
+    FlateDecode stream raises PdfError instead of yielding text."""
+    comp = zlib.compress(b"BT (Real deflate payload) Tj ET " * 20, 9)
+    with pytest.raises(PdfError, match="FlateDecode"):
+        pdf_extract_pages(_flate_page(comp[: len(comp) // 2]))
+    with pytest.raises(PdfError, match="FlateDecode"):
+        pdf_extract_pages(_flate_page(comp[:-1]))
+    bad = bytearray(comp)
+    bad[-1] ^= 0xFF  # Adler-32 trailer no longer matches
+    with pytest.raises(PdfError, match="FlateDecode"):
+        pdf_extract_pages(_flate_page(bytes(bad)))
 
 
 def test_zlib_stored_roundtrips_through_inflate():
     for payload in (b"", b"abc", b"y" * 70000):
-        assert inflate_zlib(zlib_stored(payload)) == payload
+        assert zlib.decompress(zlib_stored(payload)) == payload
 
 
 def test_indirect_length_and_array_contents():

@@ -439,6 +439,24 @@ def test_deletion_vector_mor_delete(spark, tmp_path):
     )
 
 
+def test_truncated_dv_sidecar_fails_closed(spark, tmp_path):
+    """A damaged DV sidecar must fail the read, not un-delete rows: a
+    lenient JSON read turns the truncated record into a null position
+    list and the deleted rows would come back."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql import functions as F
+
+    tl = _mk(tmp_path)
+    tl.append(spark.range(20).withColumnRenamed("id", "k"), n_files=1)
+    tl.delete_where_mor(spark, F.col("k") % 2 == 0)
+    assert tl.read(spark).count() == 10
+    (sidecar,) = (tl.root / p for p in tl.dvs().values())
+    text = sidecar.read_text()
+    sidecar.write_text(text[: len(text) // 2])
+    with pytest.raises(Py4JJavaError, match="(?i)malformed"):
+        tl.read(spark).collect()
+
+
 def test_deletion_vector_checkpoint_and_vacuum(spark, tmp_path):
     """DV bindings ride checkpoints (replay above the floor) and
     vacuum keeps referenced sidecars while removing orphans."""

@@ -55,12 +55,9 @@ _CATEGORY = {
     "hive_clone_spark.pipeline.selection": "LLM pipeline: selection / scoring",
     "hive_clone_spark.pipeline.adpcmcodec": "Codecs: IMA ADPCM (clean-room)",
     "hive_clone_spark.pipeline.pdfcodec": "Codecs: PDF text extraction (clean-room)",
-    "hive_clone_spark.sources.zstd": "Codecs: Zstandard (clean-room RFC 8878)",
     "hive_clone_spark.pipeline.qoicodec": "Codecs: QOI image (clean-room)",
-    "hive_clone_spark.sources.inflate": "Codecs: DEFLATE (clean-room RFC 1951)",
-    "hive_clone_spark.sources.lz4": "Codecs: LZ4 block (clean-room)",
+    "hive_clone_spark.sources.codecs": "Codecs: Snappy / LZ4 / zstd / DEFLATE (pyarrow + zlib)",
     "hive_clone_spark.sources.msgpack": "Codecs: MessagePack (clean-room)",
-    "hive_clone_spark.sources.snappy": "Codecs: Snappy block (clean-room)",
     "hive_clone_spark.sources.avro": "Sources / sinks: Avro (clean-room OCF)",
     "hive_clone_spark.sources.tfrecord": "Sources / sinks: TFRecord (clean-room)",
     "hive_clone_spark.sources.queries": "Sources / sinks",
