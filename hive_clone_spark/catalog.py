@@ -6,14 +6,17 @@ table under /root/testdata/sf{0.001,0.01,0.1}/.
 
 Reading is always `spark.read.parquet` so Catalyst gets predicate
 pushdown + column pruning into the scan; nothing is cached here — the
-query functions decide what to persist.
+query functions decide what to persist. Rows built on the driver enter
+through `local_frame`, which hands them to the JVM as a local relation.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -67,6 +70,43 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.session.timeZone", "UTC")
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType
+) -> DataFrame:
+    """Driver-literal rows as a JVM local relation (`LocalTableScan`).
+
+    `spark.createDataFrame` on a Python list parallelizes the rows
+    into a Python RDD, so every scan of the frame starts
+    Python-worker tasks. Here the rows become one Arrow table that is
+    shipped to the JVM once; Catalyst plans a `LocalTableScan` and no
+    Python worker runs. ``schema`` is a DDL string (parsed exactly as
+    `createDataFrame` parses it) or a StructType; each row is a tuple
+    in field order. pyarrow checks every value against its field type,
+    so a wrong-typed value raises `ArrowInvalid` and a NULL in a
+    non-nullable field raises `ValueError`. Naive datetimes in a
+    TIMESTAMP column are read as UTC."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    rows = list(rows)
+    width = len(schema.fields)
+    for row in rows:
+        if len(row) != width:
+            raise ValueError(
+                f"local_frame: row {row!r} has {len(row)} values for "
+                f"{width} fields"
+            )
+    arrow_schema = to_arrow_schema(schema)
+    columns = zip(*rows) if rows else [()] * width
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hive_clone_spark.catalog import local_frame
 from hive_clone_spark.hive_game.fixtures import PIECES_SCHEMA
 from hive_clone_spark.hive_game.gameover import evaluate_game_over
 from hive_clone_spark.hive_game.movegen import legal_moves
@@ -55,7 +56,7 @@ def play_game(
     per-ply verdicts). Raises IllegalPly on any rule violation —
     including a ply played after the game already ended.
     """
-    board = spark.createDataFrame([], PIECES_SCHEMA)
+    board = local_frame(spark, [], PIECES_SCHEMA)
     turn = "White"
     verdicts: list[str] = []
     verdict = "None"

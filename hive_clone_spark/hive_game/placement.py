@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hive_clone_spark.catalog import local_frame
 from hive_clone_spark.hive_game.board import occupancy, tops
 from hive_clone_spark.hive_game.fixtures import directions_df
 
@@ -16,7 +17,8 @@ RESERVE_SEED = [("Queen", 1), ("Spider", 2), ("Beetle", 2), ("Grasshopper", 3), 
 def reserves(spark: SparkSession, pieces: DataFrame) -> DataFrame:
     """(color, bug, remaining): seed minus already-placed counts
     (P1, ui_app.cpp:498-510)."""
-    seed = spark.createDataFrame(
+    seed = local_frame(
+        spark,
         [(c, b, n) for c in ("White", "Black") for b, n in RESERVE_SEED],
         "color STRING, bug STRING, seeded INT",
     )
@@ -63,7 +65,7 @@ def placement_targets(spark: SparkSession, pieces: DataFrame, color: str) -> Dat
     top = tops(pieces)
 
     if occ.isEmpty():  # empty board special case (literal 1-row DF)
-        return spark.createDataFrame([(0, 0)], "to_q INT, to_r INT")
+        return local_frame(spark, [(0, 0)], "to_q INT, to_r INT")
 
     cands = (
         occ.join(dirs)

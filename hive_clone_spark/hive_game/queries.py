@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hive_clone_spark.catalog import local_frame
 from hive_clone_spark.hive_game import geometry
 from hive_clone_spark.hive_game.board import corridor_ok_cols, occupancy, tops
 from hive_clone_spark.hive_game.fixtures import (
@@ -125,7 +126,7 @@ _MOVE_OUT = (
 def g_occupied_stack_height(spark: SparkSession, sf_dir: str) -> DataFrame:
     pieces = pieces_df(spark, "f8_stack")
     occ = occupancy(pieces)
-    probes = spark.createDataFrame([(0, 0), (1, 0), (0, 1)], "pq INT, pr INT")
+    probes = local_frame(spark, [(0, 0), (1, 0), (0, 1)], "pq INT, pr INT")
     return (
         probes.join(
             occ, (probes.pq == occ.q) & (probes.pr == occ.r), "left"
@@ -284,7 +285,8 @@ def g_can_slide(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjustment in corridor_ok_cols never fires)."""
     pieces = pieces_df(spark, "f7_beetle_on_top")
     occ = occupancy(pieces)
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         [(i, 0, 0) for i in range(6)], "dir_idx INT, from_q INT, from_r INT"
     )
     out = corridor_ok_cols(probes, occ, "from_q", "from_r", "cs")
@@ -511,7 +513,7 @@ def g_color_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT CAST(0 AS INT) AS to_q, CAST(0 AS INT) AS to_r",
 )
 def g_placement_empty_board(spark: SparkSession, sf_dir: str) -> DataFrame:
-    empty = spark.createDataFrame([], PIECES_SCHEMA)
+    empty = local_frame(spark, [], PIECES_SCHEMA)
     return placement_targets(spark, empty, "White")
 
 
@@ -724,7 +726,7 @@ _TIMER_FRAMES = 120  # 2 s of simulated frames at the 60 FPS cap
     """,
 )
 def g_timer_countdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    timers = spark.createDataFrame(_TIMERS, "name STRING, start_sec DOUBLE")
+    timers = local_frame(spark, _TIMERS, "name STRING, start_sec DOUBLE")
     frames = timers.select(
         "name",
         "start_sec",

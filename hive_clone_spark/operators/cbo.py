@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_clone_spark.catalog import table
+from hive_clone_spark.catalog import local_frame, table
 from hive_clone_spark.registry import register
 
 # Demo threshold: 256 KiB (production: spark.sql.autoBroadcastJoinThreshold,
@@ -395,7 +395,8 @@ def q160_dp_join_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
         .count()
     )
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [
             (nm, s2, s3, s4, cost, nm == chosen_name, actual)
             for nm, s2, s3, s4, cost in ledger

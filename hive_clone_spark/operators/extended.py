@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from hive_clone_spark.catalog import table
+from hive_clone_spark.catalog import local_frame, table
 from hive_clone_spark.pipeline.common import spread, sql_portable_hash
 from hive_clone_spark.registry import register
 
@@ -1262,7 +1262,8 @@ def q52_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.nullif(F.col("o_orderstatus"), F.lit("O")).alias("status_key"),
         "o_totalprice",
     )
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [("F", "finished"), ("P", "pending"), (None, "open")],
         "status_key string, status_name string",
     )
@@ -2791,7 +2792,8 @@ def q90_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = digits.groupBy("d").agg(F.count("*").alias("cnt"))
     t = c.agg(F.sum("cnt").alias("total"))
-    e = spark.createDataFrame(
+    e = local_frame(
+        spark,
         [(d, p) for d, p in _BENFORD_PPM.items()], "d LONG, expected_ppm LONG"
     )
     return (
@@ -4333,11 +4335,13 @@ def q159_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
         (portable_hash(F.concat(F.col("event_id").cast("string"), F.lit("y")))
          % 65536).alias("py"),
     )
-    bbox = spark.createDataFrame(
+    bbox = local_frame(
+        spark,
         _poly_bboxes(),
         "poly STRING, x_min BIGINT, x_max BIGINT, y_min BIGINT, y_max BIGINT",
     )
-    edges = spark.createDataFrame(
+    edges = local_frame(
+        spark,
         _poly_edges(),
         "poly STRING, seq INT, x1 BIGINT, y1 BIGINT, x2 BIGINT, y2 BIGINT",
     )
@@ -6073,7 +6077,7 @@ def q189_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         (h, xs[total - 24 + h - 1], l + h * b + s[h - 1])
         for h in range(1, 25)
     ]
-    raw = spark.createDataFrame(rows, "h BIGINT, actual BIGINT, f DOUBLE")
+    raw = local_frame(spark, rows, "h BIGINT, actual BIGINT, f DOUBLE")
     errs = raw.select(
         "h",
         "actual",
@@ -7289,7 +7293,8 @@ def q208_key_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-sorted driver-side: an orderBy on this 6-row local relation
     # costs a full range-exchange job (~0.6 s of pure scheduler floor,
     # measured) for rows that are already in hand
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         data,
         "candidate STRING, n_rows BIGINT, n_distinct BIGINT, "
         "is_key BOOLEAN, dup_factor_millis BIGINT",
@@ -7379,7 +7384,8 @@ def q209_join_strategy_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = dict(zip(_HINT_ARMS, pool.map(run_arm, _HINT_ARMS)))
     base = rows[_HINT_ARMS[0]]
     keys = ("n_groups", "total_orders", "key_moment", "total_rev_cents")
-    return c.sparkSession.createDataFrame(
+    return local_frame(
+        c.sparkSession,
         sorted(
             (h, r["n_groups"], r["total_orders"], r["key_moment"],
              r["total_rev_cents"], bool(all(r[k] == base[k] for k in keys)))
@@ -8551,7 +8557,8 @@ def q253_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("o_orderstatus") == "P").cast("long")).alias("n_pending"),
     ).collect()[0]
     m = obs.get  # blocks until the action above delivered the metrics
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(m["n_rows"]),

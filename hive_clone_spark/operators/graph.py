@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_clone_spark.catalog import table
+from hive_clone_spark.catalog import local_frame, table
 from hive_clone_spark.registry import register
 
 
@@ -489,7 +489,8 @@ def q101_sssp_cheapest_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     if changed:
         raise RuntimeError("sssp: no fixpoint within the round budget")
     n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    ddf = spark.createDataFrame(
+    ddf = local_frame(
+        spark,
         [(k, v) for k, v in dist.items()], "id INT, cost_cents BIGINT"
     )
     return (
@@ -607,7 +608,8 @@ def q137_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         if u in cur and v in cur:
             core_deg[u] += 1
             core_deg[v] += 1
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         sorted(core_deg.items()), "id INT, core_degree BIGINT"
     )
     return (
@@ -936,7 +938,8 @@ def q218_handshake_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append(
             (k, int(stats["n"]), cum_matched, n_live, n_live == 0, cum_checksum)
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "round BIGINT, n_matched BIGINT, cum_matched BIGINT, "
         "n_live_edges_after BIGINT, is_maximal_after BOOLEAN, "
@@ -1066,7 +1069,7 @@ def q229_mst_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(graph disconnected?)"
         )
     n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    mst = spark.createDataFrame(chosen, "u INT, v INT, w_cents BIGINT")
+    mst = local_frame(spark, chosen, "u INT, v INT, w_cents BIGINT")
     nu = n.select(F.col("n_nationkey").alias("u"), F.col("n_name").alias("u_name"))
     nv = n.select(F.col("n_nationkey").alias("v"), F.col("n_name").alias("v_name"))
     return (
@@ -1262,7 +1265,8 @@ def q233_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_core_t = int(totals[0] or 0)
     n_border_t = int(totals[1] or 0)
     n_clusters = int(totals[2])
-    census = spark.createDataFrame(
+    census = local_frame(
+        spark,
         [
             (
                 "census",

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from hive_clone_spark.catalog import table
+from hive_clone_spark.catalog import local_frame, table
 from hive_clone_spark.registry import register
 
 
@@ -623,7 +623,8 @@ def q17_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q18_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [
             ("tiny", 0.0, 50000.0),
             ("small", 50000.0, 150000.0),

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_clone_spark.catalog import table
+from hive_clone_spark.catalog import local_frame, table
 from hive_clone_spark.pipeline.common import portable_hash, sql_portable_hash
 from hive_clone_spark.registry import register
 
@@ -673,7 +673,7 @@ def q157_hdr_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     n = vals.agg(F.count("*").alias("n_rows"))
-    pcts = spark.createDataFrame([(p,) for p in _HDR_PCTS], "pct BIGINT")
+    pcts = local_frame(spark, [(p,) for p in _HDR_PCTS], "pct BIGINT")
     targets = pcts.crossJoin(F.broadcast(n)).select(
         "pct",
         "n_rows",
@@ -821,7 +821,7 @@ def q172_grouped_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     n = vals.groupBy("g").agg(F.count("*").alias("n_rows"))
-    pcts = spark.createDataFrame([(p,) for p in _GHDR_PCTS], "pct BIGINT")
+    pcts = local_frame(spark, [(p,) for p in _GHDR_PCTS], "pct BIGINT")
     targets = n.crossJoin(F.broadcast(pcts)).select(
         "g", "pct", "n_rows",
         F.expr("(pct * n_rows + 99) div 100").alias("k_target"),
@@ -1152,7 +1152,8 @@ def q219_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         and m_row["scaled"] == d_row["scaled"]
     )
     total_ndv = keyed.agg(F.countDistinct("o_custkey")).collect()[0][0]
-    merged_row = spark.createDataFrame(
+    merged_row = local_frame(
+        spark,
         [
             (
                 "merged",

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_clone_spark.catalog import table
+from hive_clone_spark.catalog import local_frame, table
 from hive_clone_spark.pipeline.common import (
     MOD,
     SQL_WORDS,
@@ -2212,7 +2212,8 @@ _LSH_S = "(CAST(i AS DOUBLE) / 20.0)"
     """,
 )
 def p_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cfg = spark.createDataFrame(
+    cfg = local_frame(
+        spark,
         [(b, r) for b, r, _, _ in _LSH_CONFIGS], "b INT, r INT"
     )
     grid = cfg.crossJoin(
@@ -2411,7 +2412,8 @@ def p_record_linkage_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tp = cls.where((F.col("verdict") == "match") & (F.col("ka") == F.col("kb"))).count()
     fp = cls.where((F.col("verdict") == "match") & (F.col("ka") != F.col("kb"))).count()
     truth = b.count()
-    metrics = spark.createDataFrame(
+    metrics = local_frame(
+        spark,
         [
             ("precision", None, tp, tp + fp, tp * 1000 // max(tp + fp, 1)),
             ("recall", None, tp, truth, tp * 1000 // max(truth, 1)),

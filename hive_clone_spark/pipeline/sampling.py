@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_clone_spark.catalog import table
+from hive_clone_spark.catalog import local_frame, table
 from hive_clone_spark.pipeline.common import portable_hash, sql_portable_hash
 from hive_clone_spark.registry import register
 
@@ -593,7 +593,8 @@ def p_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         offsets[b] = offset
         offset += counts[b]
     off_df = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(b, offsets[b]) for b in sorted(offsets)], "band INT, off BIGINT"
         )
     )

@@ -13,7 +13,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_clone_spark.catalog import table
+from hive_clone_spark.catalog import local_frame, table
 from hive_clone_spark.pipeline.common import (
     MOD,
     SQL_WORDS,
@@ -1050,7 +1050,8 @@ def _corpus_merges(
 )
 def p_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_rows = _corpus_merges(spark, sf_dir, _BPE_ITERS, force=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out_rows,
         "iter INT, left_sym STRING, right_sym STRING, "
         "pair_count BIGINT, n_symbols BIGINT",
@@ -2364,7 +2365,7 @@ def p_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         b,
         (a.doc_id == b.doc_b) & (b.p2 == a.p1 + 1),
     ).select("doc_id", "w1", "w2")
-    phrases = d.sparkSession.createDataFrame(_PHRASES, ["w1", "w2"])
+    phrases = local_frame(d.sparkSession, _PHRASES, "w1 STRING, w2 STRING")
     hits = F.broadcast(phrases).join(cand, ["w1", "w2"], "left")
     return (
         hits.groupBy("w1", "w2")

@@ -49,7 +49,7 @@ import numpy as np  # noqa: F401  (kept with the codec family imports)
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_clone_spark.catalog import table
+from hive_clone_spark.catalog import local_frame, table
 from hive_clone_spark.pipeline.common import (
     SQL_WORDS,
     portable_hash,
@@ -648,7 +648,8 @@ def _robots_text_sql() -> str:
 )
 def p_robots_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    langs = spark.createDataFrame(
+    langs = local_frame(
+        spark,
         list(enumerate(_ROBOTS_LANGS)), "i BIGINT, lang STRING"
     )
     origins = docs.select("source").distinct().select(

@@ -25,7 +25,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_clone_spark.catalog import table
+from hive_clone_spark.catalog import local_frame, table
 from hive_clone_spark.registry import register
 from hive_clone_spark.sources.io import write_bucketed, write_zordered
 
@@ -815,7 +815,8 @@ def q153_hilbert_vs_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             nx.alias("hx"), ny.alias("hy"),
             (F.col("hidx") + quad * (s * s)).alias("hidx"),
         )
-    rects = spark.createDataFrame(
+    rects = local_frame(
+        spark,
         _HIL_RECTS, "rect_id INT, qx0 INT, qx1 INT, qy0 INT, qy1 INT"
     )
     return (
@@ -1272,7 +1273,7 @@ def q167_bloom_file_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     if probe_pass:
         union_files = sorted({f for _, f in probe_pass})
         pp = F.broadcast(
-            spark.createDataFrame(probe_pass, "q BIGINT, pf INT")
+            local_frame(spark, probe_pass, "q BIGINT, pf INT")
         )
         reads = spark.read.option("basePath", dest).parquet(
             *[f"{dest}/f={f}" for f in union_files]
@@ -1289,7 +1290,8 @@ def q167_bloom_file_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         for row in ledger:
             row[4] = found.get(row[0], 0)
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [tuple(r) for r in ledger],
         "probe_key BIGINT, present BOOLEAN, files_minmax BIGINT, "
         "files_bloom BIGINT, n_found BIGINT",
@@ -1379,7 +1381,8 @@ def q182_csv_dialect_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if tag == "comma":
             lines = lines.unionAll(
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     [("comma", "id,name,region")], "tag STRING, value STRING"
                 )
             )

@@ -42,6 +42,7 @@ warehouse surface the driver contract adds.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import pathlib
@@ -51,7 +52,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_clone_spark.catalog import table
+from hive_clone_spark.catalog import local_frame, table
 from hive_clone_spark.registry import register
 
 _CHECKPOINT_EVERY = 8
@@ -181,14 +182,9 @@ class TxLog:
         travel to an empty snapshot resolves the schema AS OF that
         version, never a later writer's."""
         if version in self._replay_cache:
-            files, stats, dvs, cons, schema, meta = self._replay_cache[
-                version
-            ]
-            # shallow copies: callers treat the containers as their own
-            return (
-                set(files), dict(stats), dict(dvs), dict(cons), schema,
-                dict(meta),
-            )
+            # deep copies on store and on hit: callers treat the nested
+            # per-file stats, the schema and meta["mapping"] as their own
+            return copy.deepcopy(self._replay_cache[version])
         start, active, stats, dvs, cons, schema, meta = (
             0, [], {}, {}, {}, None, {},
         )
@@ -239,9 +235,8 @@ class TxLog:
                 schema = c["schema"]
             if "meta" in c:
                 meta = dict(c["meta"])
-        self._replay_cache[version] = (
-            set(files), dict(stats), dict(dvs), dict(cons), schema,
-            dict(meta),
+        self._replay_cache[version] = copy.deepcopy(
+            (files, stats, dvs, cons, schema, meta)
         )
         return files, stats, dvs, cons, schema, meta
 
@@ -316,7 +311,7 @@ class TxLog:
         schema = self.table_schema(spark, version)
         if schema is None:
             raise ValueError("txlog: empty table with no recorded schema")
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
     def alter_add_column(self, spark: SparkSession, name: str, ddl_type: str) -> int:
         """Metadata-only schema evolution (Delta/Iceberg ADD COLUMN):
@@ -737,7 +732,8 @@ class TxLog:
         sidecar-to-data-file binding is METADATA (O(files touched), a
         commit-log fact), so the tiny local binding relation is the
         only driver-side piece."""
-        binding = spark.createDataFrame(
+        binding = local_frame(
+            spark,
             [
                 (pathlib.Path(dv).name, pathlib.Path(f).name)
                 for f, dv in dvs.items()
@@ -1055,7 +1051,7 @@ class TxLog:
 
         files, _, dvs, schema = self.branch_replay(name)
         if not files and schema is not None:
-            return spark.createDataFrame([], StructType.fromJson(schema))
+            return local_frame(spark, [], StructType.fromJson(schema))
         return self._read_files(spark, sorted(files), dvs)
 
     def publish_branch(
@@ -3403,7 +3399,8 @@ def q170_gdpr_purge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(str(tl.data_dir)).where(condemned).count()
     )
     rows_after = int(tl.read(spark).count())
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 n_subject,
@@ -3663,7 +3660,8 @@ def q195_txlog_audit_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     for m in (0, 1, 2):
         tl.append(o.where(F.col("o_orderkey") % 4 == m), n_files=2)
     rows = chain_ledger(tl, spark)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "version BIGINT, op STRING, n_rows_added BIGINT, chain_hash STRING"
     ).orderBy("version")
 
@@ -3947,7 +3945,8 @@ def q210_txlog_files_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         (f, int(s["o_orderkey"][0]), int(s["o_orderkey"][1]))
         for f, s in stats.items()
     ]
-    meta = spark.createDataFrame(
+    meta = local_frame(
+        spark,
         meta_rows, "file STRING, stat_min BIGINT, stat_max BIGINT"
     )
     # audit side: per-file physical truth from ONE scan
@@ -4115,7 +4114,8 @@ def q215_txlog_optimize_clustering(spark: SparkSession, sf_dir: str) -> DataFram
     }
     hit0, hit1 = hits[0], hits[1]
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 "before_optimize",
@@ -4217,7 +4217,8 @@ def q231_txlog_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
         changed = hist[version]["n_added"] + hist[version]["n_removed"]
         for logical, phys in sorted(mapping.items()):
             schema_rows.append(("schema", version, logical, phys, changed))
-    schema_df = spark.createDataFrame(
+    schema_df = local_frame(
+        spark,
         schema_rows,
         "arm STRING, version INT, logical STRING, physical STRING, "
         "n_files_changed INT",
@@ -4376,7 +4377,7 @@ def q232_txlog_identity_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
             bases.append(
                 (os.path.basename(a["file"]), int(a["identity_base"]))
             )
-    bases_df = spark.createDataFrame(bases, "fname STRING, base BIGINT")
+    bases_df = local_frame(spark, bases, "fname STRING, base BIGINT")
     data = spark.read.parquet(*[str(tl.root / f) for f in tl.active_files()])
     data = data.select(
         "k",
@@ -4398,7 +4399,8 @@ def q232_txlog_identity_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("id").alias("n_distinct"),
         F.sum(F.col("id") * (F.col("k") % 97)).cast("long").alias("checksum"),
     )
-    files_df = spark.createDataFrame(
+    files_df = local_frame(
+        spark,
         file_rows, "arm STRING, seq INT, base BIGINT, n_rows BIGINT"
     ).select(
         "*",
@@ -4564,7 +4566,8 @@ def q235_change_feed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .count()
     )
-    ledger = spark.createDataFrame(
+    ledger = local_frame(
+        spark,
         [
             ("run", 1, None, run1[0], run1[1]),
             ("run", 2, None, run2[0], run2[1]),
@@ -4650,7 +4653,8 @@ def q258_schema_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
          int(aggs[v]["s"]) if aggs[v]["s"] is not None else 0)
         for v in (0, 1, 2)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "version BIGINT, n_rows BIGINT, cols STRING, key_sum BIGINT"
     ).orderBy("version")
 
@@ -4752,7 +4756,8 @@ def q259_alter_add_column(spark: SparkSession, sf_dir: str) -> DataFrame:
         if "priority_flag" in cols[v].split(",") and nt is None:
             nt = 0  # SUM over all-NULL is NULL; the column exists, so 0
         rows.append((v, int(aggs[v]["n"]), cols[v], nt))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version BIGINT, n_rows BIGINT, cols STRING, n_flag_true BIGINT",
     ).orderBy("version")
@@ -4917,7 +4922,8 @@ def q260_alter_rename_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
                 c,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version BIGINT, op STRING, n_files_changed BIGINT, "
         "n_rows BIGINT, cols STRING, name_len_sum BIGINT, "
@@ -5050,7 +5056,8 @@ def q261_restore_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for v in range(5)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version BIGINT, op STRING, n_rows BIGINT, cols STRING, "
         "key_sum BIGINT",
@@ -5171,7 +5178,8 @@ def q262_reorg_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for v in range(3)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version BIGINT, op STRING, n_rows BIGINT, key_sum BIGINT, "
         "n_dv_bound BIGINT, n_files_changed BIGINT",

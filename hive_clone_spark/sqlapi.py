@@ -25,7 +25,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_clone_spark.catalog import register_views, table
+from hive_clone_spark.catalog import local_frame, register_views, table
 from hive_clone_spark.registry import register
 
 
@@ -235,7 +235,8 @@ def q124_catalog_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
         ):
             rows.append((tbl, col.name, col.dataType, i))
     return (
-        spark.createDataFrame(
+        local_frame(
+            spark,
             rows, "table_name STRING, column_name STRING, data_type STRING, "
             "ordinal INT"
         )
@@ -1264,6 +1265,8 @@ def _read_affected(
 def txlog_sql_dml(spark: SparkSession, tl, m: int, statement: str) -> str:
     """Parse one DML statement and execute it as a txlog commit.
     Returns the op name recorded in the log."""
+    import pyarrow.parquet as pq
+
     from hive_clone_spark.sources.txlog import (
         CommitConflictError,
         ConstraintViolationError,
@@ -1679,9 +1682,12 @@ def txlog_sql_dml(spark: SparkSession, tl, m: int, statement: str) -> str:
                 # file's own parquet footer (zero extra Spark jobs — the
                 # pre-r14 shape ran a separate min/max aggregate over
                 # the insert frame before staging it, computing the
-                # anti-join twice). No NOT-MATCHED rows -> the staged
-                # file is empty -> no footer stats: drop the file and
-                # commit no insert action, exactly the old no-op path.
+                # anti-join twice). Emptiness is the footer's row count:
+                # a file of zero NOT-MATCHED rows is dropped and commits
+                # no insert action. A non-empty file whose footer has no
+                # key bounds (every inserted key NULL, or a writer that
+                # skipped statistics) commits a stats-less add, which
+                # readers scan conservatively.
                 ins_adds = tl.stage_data(
                     tl.to_physical(inserts, expected) if mapped else inserts,
                     n_files=1,
@@ -1689,11 +1695,13 @@ def txlog_sql_dml(spark: SparkSession, tl, m: int, statement: str) -> str:
                 pkey = mapping.get(tgt_key, tgt_key) if mapped else tgt_key
                 kept = []
                 for a in ins_adds:
-                    mnmx = _footer_minmax(tl.root / a["file"], pkey)
-                    if mnmx is None:
-                        (tl.root / a["file"]).unlink()
+                    path = tl.root / a["file"]
+                    if pq.read_metadata(path).num_rows == 0:
+                        path.unlink()
                         continue
-                    a["stats"] = {tgt_key: [mnmx[0], mnmx[1]]}
+                    mnmx = _footer_minmax(path, pkey)
+                    if mnmx is not None:
+                        a["stats"] = {tgt_key: [mnmx[0], mnmx[1]]}
                     kept.append(a)
                 ins_adds = kept
             try:

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_clone_spark.catalog import table
+from hive_clone_spark.catalog import local_frame, table
 from hive_clone_spark.registry import register
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
@@ -999,7 +999,8 @@ def q162_stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     input_rows = ev.count()
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [
             (day, etype, n, state["late"], input_rows)
             for (day, etype), n in sorted(state["counts"].items())

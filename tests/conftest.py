@@ -33,6 +33,10 @@ CORRECTNESS_SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
 # Whale tests (node name, with param for parametrized ones) and their
 # measured call time on the round-14 full-suite profiling run
 # (--durations=80, throttled epoch — relative cost is what matters).
+# The game playouts and g_* oracle cases were re-timed on a 4-core host
+# (SPARK_GRAFT_FULL_SUITE=1, --durations=0) once driver-literal frames
+# became JVM local relations; the four that then ran in 3-11 s, in line
+# with the fast lane's heaviest tests (9-28 s), left this list.
 # Every entry here remains covered: oracle whales by the driver's own
 # rotating 50-query DuckDB gate (and by SPARK_GRAFT_FULL_SUITE runs),
 # game/BPE whales by the fast-lane unit tests over the same engine
@@ -40,15 +44,13 @@ CORRECTNESS_SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
 # were minted from.
 _SLOW_LANE = {
     # hive_game property/integration playouts (full games through Spark)
-    "test_game_properties.py::test_move_set_invariant_under_id_relabeling",  # 158.9s
-    "test_game_properties.py::test_moves_preserve_one_hive_and_target_rules",  # 129.7s
-    "test_game_properties.py::test_seeded_random_playout_full_lifecycle",  # 42.4s
-    "test_game_integration.py::test_scripted_opening",  # 76.2s
-    "test_game_integration.py::test_full_game_to_blackwins",  # 61.2s
-    "test_game_integration.py::test_play_game_rejects_illegal_plies",  # 60.6s
-    "test_game_integration.py::test_full_game_to_draw",  # 49.7s
-    "test_game_rules.py::test_legal_moves_all_matches_per_piece",  # 53.8s
-    "test_game_rules.py::test_ant_perimeter_bounded",  # 26.2s
+    "test_game_properties.py::test_move_set_invariant_under_id_relabeling",  # 159.3s
+    "test_game_properties.py::test_moves_preserve_one_hive_and_target_rules",  # 56.8s
+    "test_game_integration.py::test_scripted_opening",  # 21.3s
+    "test_game_integration.py::test_full_game_to_blackwins",  # 22.8s
+    "test_game_integration.py::test_play_game_rejects_illegal_plies",  # 24.8s
+    "test_game_integration.py::test_full_game_to_draw",  # 25.4s
+    "test_game_rules.py::test_legal_moves_all_matches_per_piece",  # 34.0s
     # BPE delta-vs-full equivalence over 64 merge rounds
     "test_bpe.py::test_delta_bpe_matches_full_recount_over_64_merges",  # 88.0s
     # Hypothesis model-based DML suite (verdict item 3: property suites
@@ -66,13 +68,11 @@ _SLOW_LANE = {
     # oracle replays of the same heavy entry bodies
     "test_relational_oracle.py::test_query_matches_oracle[p_bpe_apply]",  # 45.3s
     "test_relational_oracle.py::test_query_matches_oracle[p_bpe_train]",  # 44.2s
-    "test_relational_oracle.py::test_query_matches_oracle[g_legal_moves_all]",  # 42.6s
+    "test_relational_oracle.py::test_query_matches_oracle[g_legal_moves_all]",  # 19.4s
     "test_relational_oracle.py::test_query_matches_oracle[p_audio_tone_detect]",  # 40.4s
     "test_relational_oracle.py::test_query_matches_oracle[p_dedup_resolve]",  # 25.7s
     "test_relational_oracle.py::test_query_matches_oracle[p_bm25_rank]",  # 22.7s
-    "test_relational_oracle.py::test_query_matches_oracle[g_grasshopper_moves]",  # 18.3s
     "test_relational_oracle.py::test_query_matches_oracle[q89_analyze_stats]",  # 16.8s
-    "test_relational_oracle.py::test_query_matches_oracle[g_spider_moves]",  # 15.3s
     "test_relational_oracle.py::test_query_matches_oracle[p_boilerplate_strip]",  # 15.2s
     "test_relational_oracle.py::test_query_matches_oracle[p_audio_vad]",  # 13.4s
     "test_relational_oracle.py::test_query_matches_oracle[p_cdc_chunk]",  # 13.3s

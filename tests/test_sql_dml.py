@@ -10,7 +10,9 @@ entry never hits them:
   * UPDATE evaluates every SET RHS against the pre-update row, so
     ``SET a = b, b = a`` swaps instead of copying;
   * MERGE whose source has no NOT-MATCHED rows stages no insert file
-    (previously crashed on int(None) bounds);
+    (previously crashed on int(None) bounds), while a non-empty insert
+    file whose footer has no key bounds (all-NULL keys, statistics off)
+    is committed without stats, never dropped;
   * MERGE WHEN MATCHED THEN DELETE / WHEN NOT MATCHED BY SOURCE
     cascade ordering (first-true-wins).
 """
@@ -112,6 +114,57 @@ def test_merge_no_inserts_stages_no_file(spark, small_log):
     hist = tl.history()[-1]
     assert hist["op"] == "merge"
     assert hist["n_added"] == hist["n_removed"]
+
+
+def _merge_insert_adds(tl):
+    """The add actions of the latest (insert-only) MERGE commit."""
+    return tl._read_commit(tl.latest_version())["add"]
+
+
+def test_merge_all_null_key_inserts_are_kept(spark, small_log):
+    """Every inserted key NULL -> the staged file's footer has no key
+    bounds. The file is not empty, so its rows must be committed (as a
+    stats-less add), not unlinked."""
+    tl, m = small_log
+    spark.createDataFrame(
+        [(None, 1.0), (None, 2.0)], "o_orderkey BIGINT, o_totalprice DOUBLE"
+    ).createOrReplaceTempView("dml_src_nullkeys")
+    txlog_sql_dml(
+        spark, tl, m,
+        "MERGE INTO t USING dml_src_nullkeys AS s"
+        " ON t.o_orderkey = s.o_orderkey"
+        " WHEN NOT MATCHED THEN INSERT *",
+    )
+    snap = _read(spark, tl)
+    assert snap.count() == m + 2
+    assert snap.where(F.col("o_orderkey").isNull()).count() == 2
+    (add,) = _merge_insert_adds(tl)
+    assert "stats" not in add
+    # a stats-less file is scanned conservatively by every key range
+    assert add["file"] in tl.scan_files("o_orderkey", 1, 1)[1]
+
+
+def test_merge_inserts_kept_when_writer_skips_statistics(spark, small_log):
+    """A writer with column statistics disabled leaves no footer
+    min/max; the inserted rows must still land."""
+    tl, m = small_log
+    spark.range(m + 1, m + 4).select(
+        F.col("id").alias("o_orderkey"), F.lit(7.0).alias("o_totalprice")
+    ).createOrReplaceTempView("dml_src_nostats")
+    spark.conf.set("parquet.column.statistics.enabled", "false")
+    try:
+        txlog_sql_dml(
+            spark, tl, m,
+            "MERGE INTO t USING dml_src_nostats AS s"
+            " ON t.o_orderkey = s.o_orderkey"
+            " WHEN NOT MATCHED THEN INSERT *",
+        )
+    finally:
+        spark.conf.unset("parquet.column.statistics.enabled")
+    keys = sorted(r["o_orderkey"] for r in _read(spark, tl).collect())
+    assert keys == list(range(1, m + 4))
+    (add,) = _merge_insert_adds(tl)
+    assert "stats" not in add
 
 
 def test_merge_matched_delete_cascade(spark, small_log):

@@ -213,6 +213,33 @@ def test_removed_file_stats_dropped_from_replay(spark, tmp_path):
     assert chosen == []  # old range gone with the old file
 
 
+def test_replay_memo_hands_out_private_nested_copies(tmp_path):
+    """A caller that mutates a nested stats entry, the schema or
+    meta["mapping"] returned by _replay must not change what the next
+    scan_files / _replay sees — on the miss that fills the memo and on
+    every hit after it."""
+    tl = _mk(tmp_path)
+    schema = {"type": "struct", "fields": [
+        {"name": "k", "type": "long", "nullable": True, "metadata": {}}
+    ]}
+    tl.commit(
+        "append",
+        add=[{"file": "data/a.parquet", "stats": {"k": [0, 9]}}],
+        meta={"mapping": {"k": "col-1"}},
+        schema=schema,
+    )
+    for _ in range(2):  # first call fills the memo, second hits it
+        _, stats, _, _, got_schema, meta = tl._replay(0)
+        stats["data/a.parquet"]["k"][0] = 100
+        got_schema["fields"][0]["name"] = "mutated"
+        meta["mapping"]["k"] = "mutated"
+        assert tl.scan_files("k", 0, 9)[1] == ["data/a.parquet"]
+        _, stats, _, _, got_schema, meta = tl._replay(0)
+        assert stats["data/a.parquet"] == {"k": [0, 9]}
+        assert got_schema == schema
+        assert meta == {"mapping": {"k": "col-1"}}
+
+
 def test_row_level_delete_conflict_retry(spark, tmp_path):
     """The q125 protocol under an actual concurrent append: writer A
     stages its copy-on-write delete against version 0, writer B lands
